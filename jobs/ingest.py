@@ -159,13 +159,13 @@ def cmd_replay(args) -> dict:
 
     n_events = events.count()  # input size (not timed as apply work)
     if args.warmup:
-        # untimed steady-state warmup: spawns the python UDF workers
-        # (pandas import is a per-session fixed cost) and faults the input
-        # into page cache, so the timed run measures events/sec of the
-        # engine, not session bring-up.
+        # untimed steady-state warmup: JIT-compiles the curation
+        # projection (sha2, path regexps) and faults the input into page
+        # cache, so the timed run measures events/sec of the engine, not
+        # session bring-up.
         from pyorchdb_spark.ingest import prepare_events
 
-        prepare_events(events, jvm_only=args.jvm_hash).write.format("noop").mode("overwrite").save()
+        prepare_events(events).write.format("noop").mode("overwrite").save()
     sb0 = _shuffle_totals(spark)
     strategy: dict | None = None
     t0 = time.time()
@@ -194,7 +194,7 @@ def cmd_replay(args) -> dict:
         thin: bool | str = {"off": False, "thin": True, "auto": "auto"}[args.thin]
         strategy = {}
         replay(lake, ledger, events, salted=salted, num_files=args.num_files,
-               jvm_only_udfs=args.jvm_hash, mor=args.mor, thin_shuffle=thin,
+               mor=args.mor, thin_shuffle=thin,
                strategy_out=strategy)
     dt = time.time() - t0
     sb1 = _shuffle_totals(spark)
@@ -246,7 +246,7 @@ def cmd_verify(args) -> dict:
     lake = LakeTable(spark, args.table)
 
     t0 = time.time()
-    prepared = prepare_events(events, jvm_only=args.jvm_hash).filter(
+    prepared = prepare_events(events).filter(
         invalid_reason().isNull()
     )
     dedup = lww_dedup_salted if args.salted else lww_dedup
@@ -546,8 +546,6 @@ def main(argv=None) -> None:
                    help="merge-on-read delta commits: per-batch write cost "
                         "proportional to the batch (not the table); reads "
                         "resolve LWW across base+delta until self-compaction")
-    r.add_argument("--jvm-hash", action="store_true",
-                   help="use built-in sha2/regexp instead of pandas UDFs (scaling isolation)")
     r.add_argument("--shuffle-partitions", type=int, default=None,
                    help="hold shuffle width constant across parallelism levels "
                         "(cluster-faithful scaling: same plan/layout, more slots; "
@@ -562,7 +560,6 @@ def main(argv=None) -> None:
                    help="also round-trip the maintenance surfaces: aggview "
                         "refresh vs full recompute, ANALYZE stats, rollback/"
                         "RESTORE sha-equality + resync horizon guard")
-    v.add_argument("--jvm-hash", action="store_true")
     v.add_argument("--shuffle-partitions", type=int, default=None)
     v.add_argument("--master", default=None)
 

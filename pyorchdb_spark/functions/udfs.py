@@ -1,11 +1,17 @@
-"""Vectorized pandas/Arrow UDFs — the engine's only Python-side compute.
+"""Vectorized pandas/Arrow UDFs.
 
 The input_hint (BASELINE.json:15) mandates: DataFrame ops + vectorized
 pandas/Arrow UDFs, **no per-row Python**. The reference's equivalent
 surface is arbitrary pandas per table (``clean_db``,
-PyOrchDB/main.py:267-274); here it is exactly three narrow, typed,
-Arrow-batched functions. ``F.sha2`` / built-in expressions are used as
-independent cross-checks in tests (SURVEY.md section 2.8 F9).
+PyOrchDB/main.py:267-274); here it is three narrow, typed, Arrow-batched
+functions.
+
+No ingest path calls ``sha256_content`` or ``normalize_path``: the
+engine curates with JVM built-ins in ``ingest.prepare_events`` (``F.sha2``,
+ICU NFC, a regexp chain) so no row crosses into a Python worker. Both
+stay as independent Python cross-checks of that projection in tests and
+the ``__spark_entry__`` parity queries (SURVEY.md section 2.8 F9);
+``_norm_one`` is the reference definition of path normalization.
 """
 
 from __future__ import annotations

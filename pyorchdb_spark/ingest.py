@@ -6,7 +6,7 @@ a single declarative Catalyst plan per batch:
 
     raw events
       → marker gate (skip committed batch_ids — broadcast anti-join)
-      → normalize_path / sha256_content (vectorized pandas UDFs)
+      → path normalization / content sha256 (JVM built-ins, no Python worker)
       → LWW dedup (salted two-stage when skew expected)
       → MERGE INTO lake table (copy-on-write over affected files)
       → marker + lineage commit
@@ -24,7 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyorchdb_spark.functions.udfs import normalize_path, sha256_content
 from pyorchdb_spark.sources.catalog import BatchLedger
 from pyorchdb_spark.sources.lake import RETAIN_ALL_TOMBSTONES, LakeTable, bucket_expr
 
@@ -66,34 +65,45 @@ def invalid_reason(keys=("repo", "path"), watermark_seq: int | None = None):
     return r
 
 
-def prepare_events(events: DataFrame, jvm_only: bool = False) -> DataFrame:
+def _normalized_path(p):
+    """Path normalization as Catalyst built-ins, equal to
+    ``functions.udfs._norm_one`` on every string: NFC first, then strip
+    leading ``./`` chains, collapse ``//`` runs, drop one trailing ``/``.
+
+    NFC goes through the ICU4J jar Spark ships, and only for paths with a
+    non-ASCII character (ASCII is NFC-invariant). ``(?s)`` and ``\\z`` keep
+    the trailing-slash rule exact: Java's ``$`` also matches before a
+    final newline, and ``.`` skips newlines without DOTALL."""
+    nfc = F.when(
+        p.rlike(r"[^\x00-\x7F]"),
+        F.reflect(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), p, F.lit(False)),
+    ).otherwise(p)
+    stripped = F.regexp_replace(nfc, r"^(\./)+", "")
+    collapsed = F.regexp_replace(stripped, r"/{2,}", "/")
+    return F.regexp_replace(collapsed, r"(?s)(.)/\z", "$1")
+
+
+def prepare_events(events: DataFrame) -> DataFrame:
     """Curation: normalize paths, stamp content sha256 (engine columns).
 
     The sha256 column is the replay invariant (BASELINE.json:15); path
     normalization keeps key identity stable across noisy producers
-    (SURVEY.md section 2.10). Both are Arrow-vectorized — no per-row
-    Python anywhere in the plan.
+    (SURVEY.md section 2.10). Both are JVM built-ins, so no row crosses
+    into a Python worker: ``F.sha2`` hashes the string's UTF-8 bytes
+    (exactly ``hashlib.sha256(v.encode("utf-8"))``) and
+    ``_normalized_path`` equals ``functions.udfs._norm_one``. The pandas
+    UDFs in ``functions/udfs.py`` stay as independent cross-checks.
 
-    ``jvm_only=True`` swaps in the equivalent built-in expressions
-    (``F.sha2``, regexp chain — byte-identical results on ASCII paths,
-    cross-checked in tests). Used by the scaling bench to isolate engine
-    scalability from python-worker co-scheduling: each pandas-UDF task
-    occupies a JVM thread *plus* a python worker, so on one box a "task
-    slot" silently consumes ~2 cores, flattening slot-count scaling runs.
+    ``reflect`` (the NFC call) is nondeterministic and interpreted in
+    Spark, so filters on ``path`` stay above this projection; callers
+    filter by ``batch_id`` BEFORE calling this, keeping partition pruning
+    on the source scan.
     """
-    if jvm_only:
-        norm = F.regexp_replace(
-            F.regexp_replace(F.regexp_replace(F.col("path"), r"^(\./)+", ""), r"/{2,}", "/"),
-            r"(.)/$",
-            "$1",
-        )
-        sha = F.sha2("content", 256)
-    else:
-        norm = normalize_path("path")
-        sha = sha256_content("content")
-    return events.withColumn("path", norm).withColumn(
+    return events.withColumn("path", _normalized_path(F.col("path"))).withColumn(
         "content_sha256",
-        F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(sha),
+        F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(
+            F.sha2("content", 256)
+        ),
     )
 
 
@@ -107,7 +117,6 @@ def apply_batch(
     n_salts: int = 16,
     num_files: int | None = None,
     cache_batch: bool = False,
-    jvm_only_udfs: bool = False,
     mor: bool = False,
     fuse_metrics: bool = False,
     rows_hint: int | None = None,
@@ -154,7 +163,7 @@ def apply_batch(
         return _apply_batch_inner(
             lake, ledger, events, batch_id,
             salted=salted, n_salts=n_salts, num_files=num_files,
-            cache_batch=cache_batch, jvm_only_udfs=jvm_only_udfs, mor=mor,
+            cache_batch=cache_batch, mor=mor,
             fuse_metrics=fuse_metrics, rows_hint=rows_hint,
             stream_safe_metrics=stream_safe_metrics,
             thin_shuffle=thin_shuffle,
@@ -173,17 +182,16 @@ def _apply_batch_inner(
     n_salts: int = 16,
     num_files: int | None = None,
     cache_batch: bool = False,
-    jvm_only_udfs: bool = False,
     mor: bool = False,
     fuse_metrics: bool = False,
     rows_hint: int | None = None,
     stream_safe_metrics: bool = False,
     thin_shuffle: bool = False,
 ) -> ApplyResult:
-    prepared = prepare_events(events, jvm_only=jvm_only_udfs)
+    prepared = prepare_events(events)
 
-    # ONE key-columns-only pass over the batch (the sha UDF is
-    # column-pruned out) computing, together: lineage metrics, C3
+    # ONE key-columns-only pass over the batch (the sha2 column is
+    # pruned out) computing, together: lineage metrics, C3
     # quarantine detection, AND — for the CoW path — the affected-bucket
     # hit set per manifest generation that MERGE needs for file pruning.
     # Before round 3 the hit set was a second distinct+collect job per
@@ -219,15 +227,15 @@ def _apply_batch_inner(
         prepared = prepared.filter(reason.isNull())
 
     # The merge runs several actions over the batch (pruning-key scan, the
-    # data-file write, lineage agg) — cache the prepared batch so the
-    # pandas UDFs run once. Batches are bounded; the table itself never is.
+    # data-file write, lineage agg) — ``cache_batch`` caches the prepared
+    # batch so curation runs once. Batches are bounded; the table never is.
     # (NB: no Observation here — observations never fire on plans derived
     # from a foreachBatch DataFrame, which would hang the streaming tail;
     # input counts come from the lineage aggregation instead.)
     # cache_batch default False: a deserialized cache of fat content rows
     # costs more (GC + storage-memory contention at high parallelism) than
-    # recomputing the batch, because Catalyst column-prunes the pandas
-    # UDFs out of the key-only pruning scan and the lineage scan — only
+    # recomputing the batch, because Catalyst column-prunes sha2 out of
+    # the key-only pruning scan and the lineage scan — only
     # the data-file write evaluates sha256 over content (measured 3x
     # regression with caching at local[32], see BENCH/BASELINE.md).
     if thin_shuffle:
@@ -523,7 +531,6 @@ def replay(
     n_salts: int = 16,
     num_files: int | None = None,
     cache_batch: bool = False,
-    jvm_only_udfs: bool = False,
     mor: bool = False,
     mor_compact_factor: int = 8,
     tombstone_lag_batches: int | None = None,
@@ -597,7 +604,6 @@ def replay(
             n_salts=n_salts,
             num_files=num_files,
             cache_batch=cache_batch,
-            jvm_only_udfs=jvm_only_udfs,
             mor=mor,
             # batch mode: lineage aggregates ride the merge plan (ONE
             # Spark job per clean batch); the previous batch's row count

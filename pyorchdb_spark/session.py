@@ -24,12 +24,19 @@ def build_session(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 in the sandbox).
     ``shuffle_partitions`` defaults to the core count — on a real cluster
     you would set this to ~2-3x total executor cores and let AQE coalesce.
+    The default applies only when this call creates the session; an
+    explicit value also applies to a live one.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
+    # getOrCreate re-applies every SQL conf of the builder to a live
+    # session, so a derived width would silently override the width the
+    # live session was built with; only an explicit one may do that.
+    live = SparkSession._instantiatedSession
+    derive = shuffle_partitions is None and (live is None or live._sc._jsc is None)
     # Derive a sensible shuffle width from the parallelism in the master
     # string so local[8] vs local[32] bench runs scale their shuffles too.
-    if shuffle_partitions is None:
+    if derive:
         if master.startswith("local[") and master[6:-1].isdigit():
             shuffle_partitions = max(int(master[6:-1]), 4)
         elif master.startswith("local-cluster[") and master.endswith("]"):
@@ -42,11 +49,13 @@ def build_session(
         else:
             shuffle_partitions = cpus
 
+    builder = SparkSession.builder.master(master).appName(app_name)
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions)).config(
+            "spark.default.parallelism", str(shuffle_partitions)
+        )
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(shuffle_partitions))
+        builder
         # AQE: runtime coalesce + skew-join splitting; the safety net under
         # our explicit salting (SURVEY.md section 4 item 1).
         .config("spark.sql.adaptive.enabled", "true")

@@ -36,18 +36,20 @@ def test_cli_generate_and_replay_both_modes(spark, tmp_path, capsys):
     stream = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stream["table_rows"] == batch["table_rows"]
 
-    # jvm-hash variant produces the IDENTICAL final state (per-row sha
-    # equality) — validates the scaling bench's UDF-isolation variant
-    main(["replay", "--events", events, "--table", str(tmp_path / "t_jvm"), "--jvm-hash", "--no-warmup"])
-    json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-
+    from pyorchdb_spark.functions.udfs import _norm_one
+    from pyorchdb_spark.oracle import expected_final_state, state_signature
     from pyorchdb_spark.sources.lake import LakeTable
 
     def sig(root):
         snap = LakeTable(spark, root).snapshot()
-        return {tuple(r) for r in snap.select("repo", "path", "content_sha256").collect()}
+        return {tuple(r) for r in snap.select("repo", "path", "content_sha256").fillna("<null>").collect()}
 
-    assert sig(str(tmp_path / "t_batch")) == sig(str(tmp_path / "t_jvm")) == sig(str(tmp_path / "t_stream"))
+    # both modes equal the pandas oracle over the generated log, whose
+    # paths are normalized in Python (independent of the engine's curation)
+    log = spark.read.parquet(events).toPandas()
+    log["path"] = log["path"].map(_norm_one)
+    exp = state_signature(expected_final_state(log))
+    assert sig(str(tmp_path / "t_batch")) == exp == sig(str(tmp_path / "t_stream"))
 
 
 def test_cli_verify_sha_equality(spark, tmp_path, capsys):
