@@ -1463,16 +1463,18 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_normalize_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """normalize_path pandas UDF, oracle-checked: synthesize noisy paths
-    from the documents table, normalize, compare against the regexp form."""
-    from pyorchdb_spark.functions.udfs import normalize_path
+    """The engine's path normalization (``ingest._normalized_path``, the
+    projection ``prepare_events`` ships), oracle-checked: synthesize noisy
+    paths from the documents table, normalize, compare against the
+    regexp form."""
+    from pyorchdb_spark.ingest import _normalized_path
 
     docs = _t(spark, sf_dir, "documents")
     noisy = docs.select(
         "doc_id",
         F.concat(F.lit("./"), F.col("source"), F.lit("//docs///"), F.col("lang"), F.lit("/")).alias("p"),
     )
-    return noisy.select("doc_id", normalize_path("p").alias("norm_path"))
+    return noisy.select("doc_id", _normalized_path(F.col("p")).alias("norm_path"))
 
 
 def q_sha256_udf(spark: SparkSession, sf_dir: str) -> DataFrame:

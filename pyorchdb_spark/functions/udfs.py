@@ -3,15 +3,16 @@
 The input_hint (BASELINE.json:15) mandates: DataFrame ops + vectorized
 pandas/Arrow UDFs, **no per-row Python**. The reference's equivalent
 surface is arbitrary pandas per table (``clean_db``,
-PyOrchDB/main.py:267-274); here it is three narrow, typed, Arrow-batched
+PyOrchDB/main.py:267-274); here it is two narrow, typed, Arrow-batched
 functions.
 
-No ingest path calls ``sha256_content`` or ``normalize_path``: the
-engine curates with JVM built-ins in ``ingest.prepare_events`` (``F.sha2``,
-ICU NFC, a regexp chain) so no row crosses into a Python worker. Both
-stay as independent Python cross-checks of that projection in tests and
-the ``__spark_entry__`` parity queries (SURVEY.md section 2.8 F9);
-``_norm_one`` is the reference definition of path normalization.
+No ingest path calls ``sha256_content``: the engine curates with JVM
+built-ins in ``ingest.prepare_events`` (``F.sha2``, ICU NFC, a regexp
+chain) so no row crosses into a Python worker. ``sha256_content`` stays
+as an independent Python cross-check in tests and the ``__spark_entry__``
+parity queries (SURVEY.md section 2.8 F9); ``_norm_one`` is the Python
+reference of path normalization that tests and the pandas oracle
+(``oracle.curated_log``) check the engine against.
 """
 
 from __future__ import annotations
@@ -54,12 +55,6 @@ def _norm_one(p: str | None) -> str | None:
     if len(p) > 1 and p.endswith("/"):
         p = p[:-1]
     return p
-
-
-@F.pandas_udf(StringType())
-def normalize_path(s: pd.Series) -> pd.Series:
-    """NFC-normalize, strip ``./`` prefixes, collapse ``//`` (SURVEY.md 2.10)."""
-    return s.map(_norm_one)
 
 
 @F.pandas_udf(StringType())

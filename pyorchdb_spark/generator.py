@@ -109,7 +109,7 @@ def change_events(
     ext = F.element_at(F.lit(_EXTS), (ext_idx + 1).cast("int"))
     lang = F.element_at(F.lit(_LANGS), (ext_idx + 1).cast("int"))
 
-    # ~5% of paths carry "./" noise — exercises normalize_path.
+    # ~5% of paths carry "./" noise — exercises path normalization.
     raw_path = F.concat(
         F.when(F.pmod(F.xxhash64(key_id, F.lit("noise")), F.lit(20)) == 0, F.lit("./")).otherwise(F.lit("")),
         dir1, F.lit("/"), dir2, F.lit("/mod_"),

@@ -66,18 +66,22 @@ def invalid_reason(keys=("repo", "path"), watermark_seq: int | None = None):
 
 
 def _normalized_path(p):
-    """Path normalization as Catalyst built-ins, equal to
-    ``functions.udfs._norm_one`` on every string: NFC first, then strip
-    leading ``./`` chains, collapse ``//`` runs, drop one trailing ``/``.
+    """Path normalization as Catalyst built-ins: NFC, then strip leading
+    ``./`` chains, collapse ``//`` runs, drop one trailing ``/``.
 
-    NFC goes through the ICU4J jar Spark ships, and only for paths with a
-    non-ASCII character (ASCII is NFC-invariant). ``(?s)`` and ``\\z`` keep
-    the trailing-slash rule exact: Java's ``$`` also matches before a
-    final newline, and ``.`` skips newlines without DOTALL."""
+    NFC is ICU4J's ``Normalizer.compose`` (the jar Spark ships), so the
+    engine's definition follows ICU's Unicode version (16.0 in ICU4J 77).
+    On characters Python's ``unicodedata`` also assigns, the result equals
+    ``functions.udfs._norm_one``; a path holding a character assigned
+    after Python's version may compose differently, so a table curated
+    by the earlier pandas UDF can carry such a path under another key.
+    ``(?s)`` and ``\\z`` keep the trailing-slash rule exact: Java's ``$``
+    also matches before a final newline, and ``.`` skips newlines without
+    DOTALL. ``compose`` throws on null, hence the null check."""
     nfc = F.when(
-        p.rlike(r"[^\x00-\x7F]"),
+        p.isNotNull(),
         F.reflect(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), p, F.lit(False)),
-    ).otherwise(p)
+    )
     stripped = F.regexp_replace(nfc, r"^(\./)+", "")
     collapsed = F.regexp_replace(stripped, r"/{2,}", "/")
     return F.regexp_replace(collapsed, r"(?s)(.)/\z", "$1")
@@ -91,8 +95,9 @@ def prepare_events(events: DataFrame) -> DataFrame:
     (SURVEY.md section 2.10). Both are JVM built-ins, so no row crosses
     into a Python worker: ``F.sha2`` hashes the string's UTF-8 bytes
     (exactly ``hashlib.sha256(v.encode("utf-8"))``) and
-    ``_normalized_path`` equals ``functions.udfs._norm_one``. The pandas
-    UDFs in ``functions/udfs.py`` stay as independent cross-checks.
+    ``_normalized_path`` equals ``functions.udfs._norm_one`` on characters
+    assigned in Python's Unicode version (``_normalized_path`` says what
+    happens to characters assigned later).
 
     ``reflect`` (the NFC call) is nondeterministic and interpreted in
     Spark, so filters on ``path`` stay above this projection; callers

@@ -12,7 +12,17 @@ import hashlib
 
 import pandas as pd
 
+from pyorchdb_spark.functions.udfs import _norm_one
+
 KEYS = ["repo", "path"]
+
+
+def curated_log(events: pd.DataFrame) -> pd.DataFrame:
+    """The raw log with paths normalized in Python (``_norm_one``) — the
+    oracle's input, independent of the engine's curation projection."""
+    out = events.copy()
+    out["path"] = out["path"].map(_norm_one)
+    return out
 
 
 def expected_final_state(events: pd.DataFrame) -> pd.DataFrame:

@@ -36,8 +36,7 @@ def test_cli_generate_and_replay_both_modes(spark, tmp_path, capsys):
     stream = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stream["table_rows"] == batch["table_rows"]
 
-    from pyorchdb_spark.functions.udfs import _norm_one
-    from pyorchdb_spark.oracle import expected_final_state, state_signature
+    from pyorchdb_spark.oracle import curated_log, expected_final_state, state_signature
     from pyorchdb_spark.sources.lake import LakeTable
 
     def sig(root):
@@ -46,8 +45,7 @@ def test_cli_generate_and_replay_both_modes(spark, tmp_path, capsys):
 
     # both modes equal the pandas oracle over the generated log, whose
     # paths are normalized in Python (independent of the engine's curation)
-    log = spark.read.parquet(events).toPandas()
-    log["path"] = log["path"].map(_norm_one)
+    log = curated_log(spark.read.parquet(events).toPandas())
     exp = state_signature(expected_final_state(log))
     assert sig(str(tmp_path / "t_batch")) == exp == sig(str(tmp_path / "t_stream"))
 

@@ -4,11 +4,10 @@ import os
 
 from pyspark.sql import functions as F
 
-from pyorchdb_spark.functions.udfs import _norm_one
 from pyorchdb_spark.generator import change_events
 from pyorchdb_spark.ingest import prepare_events, replay
 from pyorchdb_spark.operators.dedup import final_state
-from pyorchdb_spark.oracle import expected_final_state, state_signature
+from pyorchdb_spark.oracle import curated_log, expected_final_state, state_signature
 from pyorchdb_spark.sources.catalog import BatchLedger
 from pyorchdb_spark.sources.lake import LakeTable
 
@@ -16,14 +15,6 @@ from pyorchdb_spark.sources.lake import LakeTable
 def _sig(df):
     rows = df.select("repo", "path", "content_sha256").fillna("<null>").collect()
     return {tuple(r) for r in rows}
-
-
-def _oracle_log(ev):
-    """The raw log as the oracle's input, paths normalized in Python —
-    independent of the engine's own curation projection."""
-    log = ev.toPandas()
-    log["path"] = log["path"].map(_norm_one)
-    return log
 
 
 def test_multi_batch_replay_equals_single_batch(spark, tmp_path):
@@ -39,7 +30,7 @@ def test_multi_batch_replay_equals_single_batch(spark, tmp_path):
     assert _sig(lake_multi.snapshot()) == _sig(lake_single.snapshot())
 
     # and both match the pandas oracle
-    exp = expected_final_state(_oracle_log(ev))
+    exp = expected_final_state(curated_log(ev.toPandas()))
     assert _sig(lake_multi.snapshot()) == state_signature(exp)
 
 
@@ -211,7 +202,7 @@ def test_bucket_splitting_bounds_file_size(spark, tmp_path):
     assert len({(f["nb"], f["bucket"]) for f in m.files}) == len(m.files)
 
     # state intact vs oracle
-    exp = expected_final_state(_oracle_log(ev))
+    exp = expected_final_state(curated_log(ev.toPandas()))
     assert _sig(lake.snapshot()) == state_signature(exp)
 
     # a 1-key patch after splitting touches few files (cross-gen pruning)

@@ -36,6 +36,8 @@ def test_no_row_at_a_time_python():
 def test_pandas_udfs_are_vectorized():
     """Every UDF in the engine is a pandas_udf / mapInPandas (Arrow)."""
     udfs = open(os.path.join(PKG, "functions", "udfs.py")).read()
-    assert udfs.count("@F.pandas_udf") >= 3
+    # sha256_content and lang_of_path; path normalization is a JVM built-in
+    # (ingest._normalized_path), so it has no UDF here
+    assert udfs.count("@F.pandas_udf") >= 2
     mm = open(os.path.join(PKG, "operators", "multimodal.py")).read()
     assert "mapInPandas" in mm

@@ -1,7 +1,8 @@
 """Curation (``ingest.prepare_events``) runs on JVM built-ins only: it
 must equal the Python reference (``functions.udfs._norm_one`` +
-``hashlib``) on every string, and no Python evaluation node may appear in
-its plan or in a copy-on-write ``apply_batch``."""
+``hashlib``) on every string of characters assigned in Python's Unicode
+version, and no Python evaluation node may appear in its plan or in a
+copy-on-write ``apply_batch``."""
 
 from __future__ import annotations
 

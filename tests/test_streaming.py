@@ -2,9 +2,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pyorchdb_spark.functions.udfs import _norm_one
 from pyorchdb_spark.generator import change_events, write_events
-from pyorchdb_spark.oracle import expected_final_state, state_signature
+from pyorchdb_spark.oracle import curated_log, expected_final_state, state_signature
 from pyorchdb_spark.sources.catalog import BatchLedger
 from pyorchdb_spark.sources.lake import LakeTable
 from pyorchdb_spark.streaming.tail import run_tail_to_completion
@@ -12,14 +11,6 @@ from pyorchdb_spark.streaming.tail import run_tail_to_completion
 
 def _sig(df):
     return {tuple(r) for r in df.select("repo", "path", "content_sha256").fillna("<null>").collect()}
-
-
-def _oracle_log(ev):
-    """The raw log as the oracle's input, paths normalized in Python —
-    independent of the engine's own curation projection."""
-    log = ev.toPandas()
-    log["path"] = log["path"].map(_norm_one)
-    return log
 
 
 def test_stream_tail_checkpoint_resume(spark, tmp_path):
@@ -54,7 +45,7 @@ def test_stream_tail_checkpoint_resume(spark, tmp_path):
         run_tail_to_completion(spark, log_dir, lake, ledger, ckpt, num_files=2)
         assert lake.current_version() == v_phase2
 
-        exp = expected_final_state(_oracle_log(ev))
+        exp = expected_final_state(curated_log(ev.toPandas()))
         assert _sig(lake.snapshot()) == state_signature(exp)
     finally:
         ev.unpersist()
@@ -72,7 +63,7 @@ def test_stream_micro_batches_split_by_files(spark, tmp_path):
         spark, log_dir, lake, ledger, str(tmp_path / "ckpt"), num_files=2, max_files_per_trigger=2
     )
     assert ledger.markers().count() >= 2
-    exp = expected_final_state(_oracle_log(ev))
+    exp = expected_final_state(curated_log(ev.toPandas()))
     assert _sig(lake.snapshot()) == state_signature(exp)
 
 
@@ -269,7 +260,7 @@ def test_stream_tail_one_job_per_clean_batch(spark, tmp_path):
         )
 
         # and the streamed state still matches the replay oracle
-        exp_state = expected_final_state(_oracle_log(ev))
+        exp_state = expected_final_state(curated_log(ev.toPandas()))
         assert _sig(lake.snapshot()) == state_signature(exp_state)
     finally:
         ev.unpersist()
